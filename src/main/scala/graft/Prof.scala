@@ -1,16 +1,27 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Per-gate drill-down profiler (r20): runs a named gate cold + twice
   * warm and prints a per-JOB time/stage breakdown of the third run, so
   * a gate's wall time decomposes into its actions (the TimeQuery /
   * StreamProbe sibling for job-level attribution). `t30` runs the RAG
   * index lifecycle phase by phase instead. Not part of the driver
   * contract.
+  * Each timed step also prints how many generated classes Janino compiled
+  * during it and their total compile time (Spark's codegen metrics), so
+  * a warm run that still compiles shows up as such.
   * Usage: sbt "runMain graft.Prof <sfDir> <gateName|t30>" */
 object Prof {
   def t[T](label: String)(body: => T): T = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val ns0 = CodeGenerator.compileTime
     val t0 = System.nanoTime(); val r = body
-    println(f"[prof] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
+    val secs = (System.nanoTime() - t0) / 1e9
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    val compileMs = (CodeGenerator.compileTime - ns0) / 1e6
+    println(f"[prof] $label: $secs%.3f s compiles=$compiles compile_ms=$compileMs%.1f"); r
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** The OTHER process of the cross-JVM TxTable race
@@ -22,10 +20,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 object TxContender {
   def main(args: Array[String]): Unit = {
     val root = args(0)
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = graft.GraftSession.builder("local[2]", 2)
       .appName("tx-contender")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def touch(name: String, content: String = ""): Unit =
